@@ -1,9 +1,9 @@
 #!/bin/bash
-# Round-15 freeze ladder: every gate on the FINAL committed code, run
+# Freeze ladder: every gate on the FINAL committed code, run
 # sequentially from one class state (no sbt invocations after the test
 # step — the classpath the spawned executors read must not change
-# mid-ladder). Logs land in /tmp/r15/; artifacts are written into the
-# repo root. New in r15 (VERDICT r14 tasks): the scale-law gate
+# mid-ladder). Logs land in /tmp/graft_ladder/; artifacts are written
+# into the repo root. Added in r15 (VERDICT r14 tasks): the scale-law gate
 # (SCALELAW_r15.json, exit-coded growth exponents for the wall-time
 # family), the corpus-compaction soak legs (inside soak.sh), the
 # LOW-MEMORY sf0.1 gates (GRAFT_XMX=3g — spill-safety, both profiles),
@@ -13,15 +13,15 @@
 # with `false` to prove the abort rail fires before any artifact stamp.
 set -uo pipefail
 cd "$(dirname "$0")/.."
-mkdir -p /tmp/r15
+mkdir -p /tmp/graft_ladder
 FAIL=0
 step() {
   local name="$1"; shift
   echo "=== $name: $* ($(date +%H:%M:%S)) ==="
-  if "$@" > "/tmp/r15/$name.log" 2>&1; then
+  if "$@" > "/tmp/graft_ladder/$name.log" 2>&1; then
     echo "=== $name OK ($(date +%H:%M:%S)) ==="
   else
-    echo "=== $name FAILED rc=$? — tail: ==="; tail -5 "/tmp/r15/$name.log"
+    echo "=== $name FAILED rc=$? — tail: ==="; tail -5 "/tmp/graft_ladder/$name.log"
     FAIL=1
   fi
 }
@@ -38,7 +38,7 @@ fi
 [ "$FAIL" -eq 0 ] || { echo "=== ABORT: test step failed ==="; exit 1; }
 step fuzz_deep       env GRAFT_FUZZ_N=50 sbt -batch "testOnly graft.streaming.StatefulReplayProperties"
 [ "$FAIL" -eq 0 ] || { echo "=== ABORT: deep fuzz failed ==="; exit 1; }
-scripts/testcount.sh /tmp/r15/test.log | tee /tmp/r15/testcount.txt \
+scripts/testcount.sh /tmp/graft_ladder/test.log | tee /tmp/graft_ladder/testcount.txt \
   || { echo "=== testcount FAILED ==="; FAIL=1; }
 # class snapshots AFTER the sbt run, BEFORE everything else (main AND
 # test scope — the scale-law main lives in test classes)
@@ -46,10 +46,10 @@ rm -rf /tmp/graft_r15_final /tmp/graft_r15_final_test
 cp -r target/scala-2.13/classes /tmp/graft_r15_final
 cp -r target/scala-2.13/test-classes /tmp/graft_r15_final_test
 
-# preserve the r14 committed artifacts for the round-over-round compares
+# preserve the committed artifacts for the round-over-round compares
 # BEFORE any step overwrites them in the repo root
 for a in CLUSTERGATE.json CLUSTERGATE_production.json; do
-  git show "HEAD:$a" > "/tmp/r15/r14_$a" || FAIL=1
+  git show "HEAD:$a" > "/tmp/graft_ladder/prev_$a" || FAIL=1
 done
 
 step gate001         env GRAFT_CLASSES=/tmp/graft_r15_final scripts/gate.sh /root/testdata/sf0.01
@@ -67,7 +67,7 @@ step gate01_lowmem_prod env GRAFT_CLASSES=/tmp/graft_r15_final GRAFT_XMX=3g SPAR
 # mechanical green->red diff vs the r14 committed artifacts (exit-coded)
 step corr_diff       python3 scripts/correctness_compare.py CORRECTNESS_sf01_r14.json CORRECTNESS_sf01_r15.json
 step corr_diff_prod  python3 scripts/correctness_compare.py CORRECTNESS_sf01_r14_production.json CORRECTNESS_sf01_r15_production.json
-cat /tmp/r15/corr_diff.log /tmp/r15/corr_diff_prod.log > CORRECTNESS_COMPARE_r15.txt
+cat /tmp/graft_ladder/corr_diff.log /tmp/graft_ladder/corr_diff_prod.log > CORRECTNESS_COMPARE_r15.txt
 
 # COVERAGE.md citations must resolve against the FRESH sf0.1 artifact
 step coverage        python3 scripts/coverage_check.py COVERAGE.md CORRECTNESS_sf01_r15.json
@@ -99,18 +99,18 @@ step cg_chaos_prod   env SPARK_GRAFT_PROFILE=production SPARK_GRAFT_CLUSTERGATE_
 step cg_wide         scripts/clustergate.sh wide
 step cg_wide_prod    env SPARK_GRAFT_PROFILE=production SPARK_GRAFT_CLUSTERGATE_OUT=CLUSTERGATE_wide_production.json scripts/clustergate.sh wide
 
-step soak_cmp        python3 scripts/bench_compare.py --soak /tmp/r15/r14_CLUSTERGATE.json CLUSTERGATE.json 50
-step soak_cmp_prod   python3 scripts/bench_compare.py --soak /tmp/r15/r14_CLUSTERGATE_production.json CLUSTERGATE_production.json 50
-cat /tmp/r15/soak_cmp.log /tmp/r15/soak_cmp_prod.log > SOAK_COMPARE_r15.txt
+step soak_cmp        python3 scripts/bench_compare.py --soak /tmp/graft_ladder/prev_CLUSTERGATE.json CLUSTERGATE.json 50
+step soak_cmp_prod   python3 scripts/bench_compare.py --soak /tmp/graft_ladder/prev_CLUSTERGATE_production.json CLUSTERGATE_production.json 50
+cat /tmp/graft_ladder/soak_cmp.log /tmp/graft_ladder/soak_cmp_prod.log > SOAK_COMPARE_r15.txt
 
 step bench_def       scripts/bench3.sh /root/testdata/sf0.1 /tmp/graft_r15_final
 step bench_prod      env SPARK_GRAFT_PROFILE=production scripts/bench3.sh /root/testdata/sf0.1 /tmp/graft_r15_final
 step bench_def2      scripts/bench3.sh /root/testdata/sf0.1 /tmp/graft_r15_final
 step bench_prod2     env SPARK_GRAFT_PROFILE=production scripts/bench3.sh /root/testdata/sf0.1 /tmp/graft_r15_final
 
-step bench_gate      python3 scripts/bench_compare.py --gate BENCH_local_r14.json,BENCH_local_r14_series2.json /tmp/r15/bench_def.log,/tmp/r15/bench_def2.log
-step bench_gate_prod python3 scripts/bench_compare.py --gate BENCH_local_r14_production.json,BENCH_local_r14_production_series2.json /tmp/r15/bench_prod.log,/tmp/r15/bench_prod2.log
-cat /tmp/r15/bench_gate.log /tmp/r15/bench_gate_prod.log > BENCH_COMPARE_r15.txt
+step bench_gate      python3 scripts/bench_compare.py --gate BENCH_local_r14.json,BENCH_local_r14_series2.json /tmp/graft_ladder/bench_def.log,/tmp/graft_ladder/bench_def2.log
+step bench_gate_prod python3 scripts/bench_compare.py --gate BENCH_local_r14_production.json,BENCH_local_r14_production_series2.json /tmp/graft_ladder/bench_prod.log,/tmp/graft_ladder/bench_prod2.log
+cat /tmp/graft_ladder/bench_gate.log /tmp/graft_ladder/bench_gate_prod.log > BENCH_COMPARE_r15.txt
 
 echo "=== LADDER DONE fail=$FAIL ($(date +%H:%M:%S)) ==="
 exit $FAIL

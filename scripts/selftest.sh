@@ -224,7 +224,7 @@ expect 1 testcount_partial scripts/testcount.sh "$T/partial_test.log"
 
 # --- ladder abort rail: an injected failing first step must abort the
 #     ladder BEFORE any artifact-stamping step runs (code-review r13)
-expect 1 ladder_abort env GRAFT_LADDER_SMOKE=fail scripts/r15_ladder.sh
+expect 1 ladder_abort env GRAFT_LADDER_SMOKE=fail scripts/ladder.sh
 grep -q "ABORT" "$T/ladder_abort.log" || {
   echo "[FAIL] ladder_abort: no ABORT line"; FAIL=1; }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the given SF dir and
   * prints ONE JSON line. Each query is timed over `SPARK_GRAFT_BENCH_RUNS`
@@ -12,23 +11,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // SPARK_GRAFT_PROFILE=production layers the GraftSession production
     // conf block (4096 shuffle partitions + AQE coalesce/skew + RocksDB)
     // over the local master — the partition-count-invariance run, for
     // TIME, not just correctness (VERDICT r9 #5).
-    val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val builder0 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (prod) GraftSession.withProductionConfs(builder0) else builder0)
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val prod = GraftSession.productionProfile
+    val spark = GraftSession.start(GraftSession.cli(honourProfile = true))
     // Warm the session (codegen, shuffle machinery, parquet footers) so
     // per-query numbers reflect steady state, not first-query JIT.
     try {

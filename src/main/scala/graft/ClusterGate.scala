@@ -125,8 +125,7 @@ object ClusterGate {
     * RocksDB), composing the partition-count-invariance axis with the
     * JVM-boundary axis in one run. Both passes get identical confs, so
     * the fingerprint compare stays valid. */
-  private val prodProfile =
-    sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
+  private val prodProfile = GraftSession.productionProfile
 
   /** Executors are sized to the PROFILE: the first production-profile
     * run at 2048 MB workers / 1536m executors lost BOTH executors to
@@ -144,16 +143,9 @@ object ClusterGate {
   private val ExecutorMem = if (prodProfile) "3584m" else "1536m"
 
   private def buildSession(master: String): SparkSession = {
-    val b0 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(master)
-      .appName(s"graft-clustergate-$master")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // production last, so its 4096 shuffle width overrides the 8
-    val b = if (prodProfile) GraftSession.withProductionConfs(b0) else b0
+    val b = GraftSession.cli(master, partitions = 8, honourProfile = true)
+      .appName(s"graft-clustergate-$master")
     val withCluster = if (master.startsWith("local-cluster")) {
       // the spawned executor JVMs know nothing of sbt's classpath:
       // hand them this package's compiled classes explicitly (same
@@ -165,9 +157,7 @@ object ClusterGate {
       b.config("spark.executor.extraClassPath", classes)
         .config("spark.executor.memory", ExecutorMem)
     } else b
-    val spark = withCluster.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    GraftSession.start(withCluster)
   }
 
   /** Deterministic result fingerprint: columns sorted by name, every

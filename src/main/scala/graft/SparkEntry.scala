@@ -1,164 +1,49 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query contract — see SURVEY.md §7.
   *
-  * `queries` aggregates every operator pack; each key has (where SQL can
-  * express it) a DuckDB oracle twin in `oracleSql` with identical column
-  * aliases — the driver sorts columns by name and hash-compares values.
+  * `packs` is the one query registry: `queries` aggregates every pack's
+  * queries and `oracleSql` their DuckDB oracle twins, which carry
+  * identical column aliases — the oracle compare sorts columns by name
+  * and hash-compares values. Both are built once; a key that two packs
+  * define fails the build instead of silently shadowing one of them.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.TimeAnalytics.queries ++
-      graft.queries.TextOps.queries ++
-      graft.queries.VectorOps.queries ++
-      graft.queries.SimHashIvf.queries ++
-      graft.queries.Extended.queries ++
-      graft.queries.DataPrep.queries ++
-      graft.queries.Extended2.queries ++
-      graft.queries.Extended3.queries ++
-      graft.queries.Advanced.queries ++
-      graft.queries.WindowKinds.queries ++
-      graft.queries.CorpusOps.queries ++
-      graft.queries.Extended4.queries ++
-      graft.queries.Extended5.queries ++
-      graft.queries.Extended6.queries ++
-      graft.queries.SimHashPairs.queries ++
-      graft.serving.ServingPack.queries ++
-      graft.dwd.DwdPack.queries ++
-      graft.queries.SetOps.queries ++
-      graft.queries.Robustness.queries ++
-      graft.queries.Profiling.queries ++
-      graft.queries.RankingOps.queries ++
-      graft.queries.PipelineOps.queries ++
-      graft.queries.CurationOps.queries ++
-      graft.queries.PackingOps.queries ++
-      graft.queries.SelectionOps.queries ++
-      graft.queries.SuffixOps.queries ++
-      graft.queries.LmOps.queries ++
-      graft.queries.IncrementalOps.queries ++
-      graft.queries.RetrievalOps.queries ++
-      graft.queries.ComplianceOps.queries ++
-      graft.queries.SegmentOps.queries ++
-      graft.queries.GraphOps.queries ++
-      graft.queries.LayoutOps.queries ++
-      graft.queries.StoreOps.queries ++
-      graft.queries.PqOps.queries ++
-      graft.queries.TimeSeriesOps.queries ++
-      graft.queries.AnalyticsOps.queries ++
-      graft.queries.SketchOps.queries ++
-      graft.queries.BusinessOps.queries ++
-      graft.queries.StatsOps.queries ++
-      graft.queries.AuditOps.queries ++
-      graft.queries.SqlSurface.queries ++
-      graft.queries.WarehouseOps.queries ++
-      graft.queries.FeatureOps.queries ++
-      graft.queries.IntervalOps.queries ++
-      graft.queries.GovernanceOps.queries ++
-      graft.queries.CustomerValueOps.queries ++
-      graft.queries.ReadabilityOps.queries ++
-      graft.queries.EntityResolutionOps.queries ++
-      graft.queries.EventJoinOps.queries ++
-      graft.queries.CorpusAuditOps.queries ++
-      graft.queries.RevenueOps.queries ++
-      graft.queries.KmeansOps.queries ++
-      graft.queries.SequentialOps.queries ++
-      graft.queries.BandOps.queries ++
-      graft.queries.AllocOps.queries ++
-      graft.queries.DensityOps.queries ++
-      graft.queries.MomentsOps.queries ++
-      graft.queries.DriftOps.queries ++
-      graft.queries.CurveOps.queries ++
-      graft.queries.TpchClassics.queries ++
-      graft.queries.TpchClassics2.queries ++
-      graft.queries.TrainPrepOps.queries ++
-      graft.queries.CorpusSplitOps.queries ++
-      graft.queries.EngagementOps.queries ++
-      graft.queries.TrustOps.queries ++
-      graft.queries.EvalOps.queries ++
-      graft.queries.ScaleOps.queries ++
-      graft.queries.GraphScaleOps.queries ++
-      graft.queries.AutoCorrOps.queries
+  /** Every operator pack from SURVEY.md §2, each named once. */
+  val packs: Seq[QueryPack] = Seq(
+    Relational, TimeAnalytics, TextOps, VectorOps, SimHashIvf, Extended,
+    DataPrep, Extended2, Extended3, Advanced, WindowKinds, CorpusOps,
+    Extended4, Extended5, Extended6, SimHashPairs, serving.ServingPack,
+    dwd.DwdPack, SetOps, Robustness, Profiling, RankingOps, PipelineOps,
+    CurationOps, PackingOps, SelectionOps, SuffixOps, LmOps, IncrementalOps,
+    RetrievalOps, ComplianceOps, SegmentOps, GraphOps, LayoutOps, StoreOps,
+    PqOps, TimeSeriesOps, AnalyticsOps, SketchOps, BusinessOps, StatsOps,
+    AuditOps, SqlSurface, WarehouseOps, FeatureOps, IntervalOps,
+    GovernanceOps, CustomerValueOps, ReadabilityOps, EntityResolutionOps,
+    EventJoinOps, CorpusAuditOps, RevenueOps, KmeansOps, SequentialOps,
+    BandOps, AllocOps, DensityOps, MomentsOps, DriftOps, CurveOps,
+    TpchClassics, TpchClassics2, TrainPrepOps, CorpusSplitOps, EngagementOps,
+    TrustOps, EvalOps, ScaleOps, GraphScaleOps, AutoCorrOps)
+
+  /** One entry per implemented operator. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged(packs.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.TimeAnalytics.oracle ++
-      graft.queries.TextOps.oracle ++
-      graft.queries.VectorOps.oracle ++
-      graft.queries.SimHashIvf.oracle ++
-      graft.queries.Extended.oracle ++
-      graft.queries.DataPrep.oracle ++
-      graft.queries.Extended2.oracle ++
-      graft.queries.Extended3.oracle ++
-      graft.queries.Advanced.oracle ++
-      graft.queries.WindowKinds.oracle ++
-      graft.queries.CorpusOps.oracle ++
-      graft.queries.Extended4.oracle ++
-      graft.queries.Extended5.oracle ++
-      graft.queries.Extended6.oracle ++
-      graft.queries.SimHashPairs.oracle ++
-      graft.serving.ServingPack.oracle ++
-      graft.dwd.DwdPack.oracle ++
-      graft.queries.SetOps.oracle ++
-      graft.queries.Robustness.oracle ++
-      graft.queries.Profiling.oracle ++
-      graft.queries.RankingOps.oracle ++
-      graft.queries.PipelineOps.oracle ++
-      graft.queries.CurationOps.oracle ++
-      graft.queries.PackingOps.oracle ++
-      graft.queries.SelectionOps.oracle ++
-      graft.queries.SuffixOps.oracle ++
-      graft.queries.LmOps.oracle ++
-      graft.queries.IncrementalOps.oracle ++
-      graft.queries.RetrievalOps.oracle ++
-      graft.queries.ComplianceOps.oracle ++
-      graft.queries.SegmentOps.oracle ++
-      graft.queries.GraphOps.oracle ++
-      graft.queries.LayoutOps.oracle ++
-      graft.queries.StoreOps.oracle ++
-      graft.queries.PqOps.oracle ++
-      graft.queries.TimeSeriesOps.oracle ++
-      graft.queries.AnalyticsOps.oracle ++
-      graft.queries.SketchOps.oracle ++
-      graft.queries.BusinessOps.oracle ++
-      graft.queries.StatsOps.oracle ++
-      graft.queries.AuditOps.oracle ++
-      graft.queries.SqlSurface.oracle ++
-      graft.queries.WarehouseOps.oracle ++
-      graft.queries.FeatureOps.oracle ++
-      graft.queries.IntervalOps.oracle ++
-      graft.queries.GovernanceOps.oracle ++
-      graft.queries.CustomerValueOps.oracle ++
-      graft.queries.ReadabilityOps.oracle ++
-      graft.queries.EntityResolutionOps.oracle ++
-      graft.queries.EventJoinOps.oracle ++
-      graft.queries.CorpusAuditOps.oracle ++
-      graft.queries.RevenueOps.oracle ++
-      graft.queries.KmeansOps.oracle ++
-      graft.queries.SequentialOps.oracle ++
-      graft.queries.BandOps.oracle ++
-      graft.queries.AllocOps.oracle ++
-      graft.queries.DensityOps.oracle ++
-      graft.queries.MomentsOps.oracle ++
-      graft.queries.DriftOps.oracle ++
-      graft.queries.CurveOps.oracle ++
-      graft.queries.TpchClassics.oracle ++
-      graft.queries.TpchClassics2.oracle ++
-      graft.queries.TrainPrepOps.oracle ++
-      graft.queries.CorpusSplitOps.oracle ++
-      graft.queries.EngagementOps.oracle ++
-      graft.queries.TrustOps.oracle ++
-      graft.queries.EvalOps.oracle ++
-      graft.queries.ScaleOps.oracle ++
-      graft.queries.GraphScaleOps.oracle ++
-      graft.queries.AutoCorrOps.oracle
+  lazy val oracleSql: Map[String, String] = merged(packs.map(_.oracle))
+
+  private def merged[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = m.keySet.intersect(acc.keySet)
+      require(dup.isEmpty, s"keys defined by two packs: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,22 +11,10 @@ object Verify {
       if (args.length > 2) { val pats = args(2).split(',').toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_PROFILE=production layers the GraftSession.production()
+    // SPARK_GRAFT_PROFILE=production layers the GraftSession production
     // conf block (4096 shuffle partitions + AQE coalesce/skew + RocksDB)
     // over the local master — the partition-count-invariance run.
-    val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val builder0 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (prod) GraftSession.withProductionConfs(builder0) else builder0)
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cli(honourProfile = true))
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.queries.filter(kv => only(kv._1)).keys
       .toSeq.sorted

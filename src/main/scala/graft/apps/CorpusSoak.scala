@@ -177,24 +177,6 @@ object CorpusSoak {
       s"q110 chain over landed corpus ≡ batch twin under $root")
   }
 
-  private def session(): SparkSession = {
-    val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val b0 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-corpus-soak")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b = if (prod) graft.GraftSession.withProductionConfs(b0) else b0
-    b.config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTITIONS",
-        if (prod) "4096" else "8"))
-    Soak.stateStoreConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def throughputLine(phase: String, rows: Long, wallSec: Double,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val ps = q.recentProgress.toSeq
@@ -207,7 +189,7 @@ object CorpusSoak {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "corpus1" :: root :: Nil =>
-      val spark = session()
+      val spark = Soak.session("graft-corpus-soak")
       val t0 = System.nanoTime()
       writeBus(root, "f1.json", phase1Docs)
       val q = start(spark, root)
@@ -218,7 +200,7 @@ object CorpusSoak {
       System.out.flush()
       Runtime.getRuntime.halt(0)
     case "corpus2" :: root :: Nil =>
-      val spark = session()
+      val spark = Soak.session("graft-corpus-soak")
       val t0 = System.nanoTime()
       writeBus(root, "f2.json", phase2Docs) // landed during the outage
       val q = start(spark, root)            // recover from checkpoint

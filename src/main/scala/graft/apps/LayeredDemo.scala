@@ -144,15 +144,8 @@ object LayeredDemo {
 
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_demo"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-layered-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.cli("local[8]", 8).appName("graft-layered-demo"))
     val counts = runAll(spark, outDir)
     counts.foreach { case (l, c) => println(f"$l%-28s $c%6d rows") }
     val empty = counts.filter(_._2 == 0L).map(_._1)

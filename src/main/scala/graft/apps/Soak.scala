@@ -476,9 +476,9 @@ object Soak {
     SoakReport(layers, mismatches)
   }
 
-  /** `scripts/soak.sh` entry: run the soak in a fresh dir, print the
-    * per-sink counts, exit nonzero on any twin mismatch. */
-  private def session(): SparkSession = {
+  /** The soak session, shared with CorpusSoak: `local[8]` with the
+    * state-store confs. */
+  private[apps] def session(appName: String = "graft-soak"): SparkSession = {
     // SPARK_GRAFT_PROFILE=production (VERDICT r10 task 5) layers the
     // full production conf block: the knob that matters for a soak is
     // spark.sql.shuffle.partitions, which is frozen into the checkpoint
@@ -488,21 +488,13 @@ object Soak {
     // spread over hundreds of executors; in one 8-core JVM the width is
     // overridable via SPARK_GRAFT_SOAK_PARTITIONS so the
     // state-partition axis can be probed at what one process can hold.
-    val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val b0 = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-soak")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b = if (prod) graft.GraftSession.withProductionConfs(b0) else b0
+    val b = graft.GraftSession.cli("local[8]", 8, honourProfile = true)
+      .appName(appName)
     b.config("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTITIONS",
-        if (prod) "4096" else "8"))
+        if (graft.GraftSession.productionProfile) "4096" else "8"))
     stateStoreConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    graft.GraftSession.start(b)
   }
 
   private def report(spark: SparkSession, root: String,

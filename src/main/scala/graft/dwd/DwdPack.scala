@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * both engines bit-identical. `region` (5 rows, keys 0–4) plays the
   * `base_dic` lookup table with codes 2401–2405.
   */
-object DwdPack {
+object DwdPack extends graft.QueryPack {
 
   private def ct(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 

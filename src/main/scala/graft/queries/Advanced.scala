@@ -8,7 +8,7 @@ import graft.queries.Mat.StableOps
   * (the decision step after candidate generation) and a sequential
   * conversion funnel.
   */
-object Advanced {
+object Advanced extends graft.QueryPack {
 
   /** Edge-count cutoff below which components are solved with union-find
     * on the driver: after LSH/shingle candidate generation the dup graph
@@ -68,16 +68,8 @@ object Advanced {
       import s.implicits._
       val es = edges.as[(Long, Long)].collect()
       edges.unpersist()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val rows = es.map(_._1).distinct.map(n => (n, find(n))).toSeq
+      val rep = UnionFind.representatives(es)
+      val rows = es.map(_._1).distinct.map(n => (n, rep(n))).toSeq
       return rows.toDF("doc_id", "cluster_rep")
         .select(col("doc_id"), col("cluster_rep"),
           (col("doc_id") === col("cluster_rep")).as("is_kept"))
@@ -608,7 +600,7 @@ object Advanced {
 
 /** Corpus materialization: applying the dedup decision and accounting
   * the surviving token budget — the last two steps of a cleaning run. */
-object CorpusOps {
+object CorpusOps extends graft.QueryPack {
 
   /** Cleaned corpus: drop every near-dup cluster member except its
     * representative (LEFT ANTI against the is_kept=false set), then

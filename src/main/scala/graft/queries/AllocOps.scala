@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * bucket; no global sort of the fact table exists in the plan. q272
   * is a user-co-partitioned pair join bounded by the 7-day band.
   */
-object AllocOps {
+object AllocOps extends graft.QueryPack {
 
   private val SampleN = 100L
 

@@ -51,7 +51,7 @@ import org.apache.spark.sql.functions._
   *    exact up to ~10³⁸, i.e. counts to ~10⁹ per cell; past that,
   *    compute on per-arm ppm rates (documented, the q134 rule).
   */
-object AnalyticsOps {
+object AnalyticsOps extends graft.QueryPack {
 
   // ---- q185 top event paths ------------------------------------------
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * window runs on the distinct-length frame (bounded domain), never the
   * corpus; q210's window runs on the strata frame (sources × langs).
   */
-object AuditOps {
+object AuditOps extends graft.QueryPack {
 
   /** q205: one row per FK edge — child rows, orphan rows, orphan keys. */
   def fkIntegrity(s: SparkSession, d: String): DataFrame = {

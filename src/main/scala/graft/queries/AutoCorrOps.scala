@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * (DwsTrafficVcChArIsNewPageViewWindow.java:40-120) stop at windowed
   * sums; lag-domain structure is part of the extension surface.
   */
-object AutoCorrOps {
+object AutoCorrOps extends graft.QueryPack {
 
   private[queries] val AcfMaxLag = 7
   private[queries] val XcfMaxLag = 7

@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * same statistic is computable from a cents-granularity
   * counts-of-counts frame (documented trade).
   */
-object BusinessOps {
+object BusinessOps extends graft.QueryPack {
 
   /** q200: RFM segment census — one row per populated R·100+F·10+M cell. */
   def rfmSegments(s: SparkSession, d: String): DataFrame = {

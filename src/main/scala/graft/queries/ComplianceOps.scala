@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * pattern-scrubbing before publication is the standard published
   * counterpart (presidio-style), expressed relationally.
   */
-object ComplianceOps {
+object ComplianceOps extends graft.QueryPack {
 
   private val NamePat = "Customer#[0-9]+"
   private val NumPat  = "[0-9]+"

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * DISTINCT-token frame (vocabulary-bounded, the q112/q157 rule) —
   * the corpus-scale explode only feeds a map-side-combinable count.
   */
-object CorpusAuditOps {
+object CorpusAuditOps extends graft.QueryPack {
 
   /** q254: per-source chunk dedup census over the q149 chunks. */
   def chunkDedup(s: SparkSession, d: String): DataFrame = {

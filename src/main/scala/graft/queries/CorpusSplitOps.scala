@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * bounded-broadcast class — sources are a dimension, not a fact);
   * q337 is two semi-joins whose build sides are train-only distincts.
   */
-object CorpusSplitOps {
+object CorpusSplitOps extends graft.QueryPack {
 
   private val SegLen = 12
 

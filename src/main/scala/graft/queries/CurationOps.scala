@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *    False positives are removed by that exact join, so the result is
   *    EXACT and carries a plain anti-join oracle.
   */
-object CurationOps {
+object CurationOps extends graft.QueryPack {
 
   // ---- q124 heavy hitters ----
 
@@ -337,7 +337,7 @@ object CurationOps {
       .filter(col("samp") < col("rate_ppm"))
       .groupBy("source").agg(count(lit(1)).as("sampled_docs"))
     // both sides are sources-sized; hint the build side so the final
-    // stitch never SMJ-sorts (audited via graft.Explain)
+    // stitch never SMJ-sorts (audited via graft.Inspect)
     plan.join(broadcast(sampled), Seq("source"), "left")
       .select(col("source"), col("n_docs"), col("w"), col("share_ppm"),
         col("target_docs"), col("rate_ppm"),

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * frame is computed once); q296's window runs on the bounded ppm
   * domain; q297 is one scan + a 4-way literal explode.
   */
-object CurveOps {
+object CurveOps extends graft.QueryPack {
 
   // Thresholds sit in the corpus's ACTUAL candidate-Jaccard range
   // (max ≈ 30 milli here — tiny vocabulary ⇒ incidental shingle

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * never computed doubles); weights are integral doubles cast to long
   * (identical in both engines on integral values).
   */
-object CustomerValueOps {
+object CustomerValueOps extends graft.QueryPack {
 
   /** q247: cohort-month × age revenue + cumulative LTV, integer cents. */
   def cohortLtv(s: SparkSession, d: String): DataFrame = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * and RE2 treat identically (DuckDB needs the 'g' flag for global
   * replace — Spark replaces all matches by default).
   */
-object DataPrep {
+object DataPrep extends graft.QueryPack {
 
   private val ChunkTokens = 50
 

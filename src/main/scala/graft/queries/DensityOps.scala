@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * at sf0.001 AND sf0.01 (core, border, and noise all non-empty —
   * the q237 rule).
   */
-object DensityOps {
+object DensityOps extends graft.QueryPack {
 
   private val MinPts = 8L
   private val CellMilli = 100L

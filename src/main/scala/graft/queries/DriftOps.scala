@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * the fact table contributes one aggregate each. q286 is a single
   * co-partitioned join + conditional aggregate.
   */
-object DriftOps {
+object DriftOps extends graft.QueryPack {
 
   /** q285: pooled-decile PSI bucket table across date halves. */
   def psiBuckets(s: SparkSession, d: String): DataFrame = {

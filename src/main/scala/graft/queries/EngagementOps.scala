@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * q309/q310 are two grouped aggregates each over (user, day|week)
   * frames — map-side combinable, outputs calendar-bounded.
   */
-object EngagementOps {
+object EngagementOps extends graft.QueryPack {
 
   /** q308: exact five-number summary + Tukey outlier census per type. */
   def boxplot(s: SparkSession, d: String): DataFrame = {

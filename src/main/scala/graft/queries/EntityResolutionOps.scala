@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * blocks), never a driver-side union-find; its per-task state is
   * bounded by the same rule that bounds the match stage.
   */
-object EntityResolutionOps {
+object EntityResolutionOps extends graft.QueryPack {
 
   private val EditK = 2
 
@@ -103,7 +103,7 @@ object EntityResolutionOps {
     * driver planning, ~25 sequential sub-second jobs here) dominated
     * q251/q269 at every scale where blocks are bounded (r16; guide
     * §1.2 — the distributed algorithm before per-task work; measured
-    * via graft.Profile: the loop's rounds were latency, not data).
+    * via graft.Inspect jobs: the loop's rounds were latency, not data).
     *
     * Scale (100 TB): the per-task state is one block's MATCH EDGES —
     * bounded by the same prefix-blocking contract that already bounds
@@ -114,27 +114,11 @@ object EntityResolutionOps {
     * keys (q159/q287/q295 use it unchanged); using it here priced a
     * block-local problem at global-fixpoint cost. */
   private[queries] def blockClosure(edges: DataFrame): DataFrame = {
-    val comps = udf((es: Seq[org.apache.spark.sql.Row]) => {
-      // union-find, smaller root wins ⇒ each root is its component's
-      // lexicographic minimum (the q159 cluster_rep contract)
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      es.foreach { e =>
-        val a = e.getString(0); val b = e.getString(1)
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      parent.keysIterator.toArray.sorted.map(k => (k, find(k)))
-    })
+    // smaller root wins ⇒ each root is its component's lexicographic
+    // minimum (the q159 cluster_rep contract)
+    val comps = udf((es: Seq[org.apache.spark.sql.Row]) =>
+      UnionFind.representatives(es.map(e => (e.getString(0), e.getString(1))))
+        .toArray.sortBy(_._1))
     edges
       .groupBy(substring(col("doc_a"), 1, 16).as("blk"))
       .agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es"))

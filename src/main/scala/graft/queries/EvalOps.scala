@@ -55,7 +55,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType, IntegerTyp
   * (training-pipeline mandate), composing the q333 quantization, q340
   * unroll-oracle and q345 counting-algebra devices.
   */
-object EvalOps {
+object EvalOps extends graft.QueryPack {
 
   private val K = 8 // coreset size / seed-cluster count
 

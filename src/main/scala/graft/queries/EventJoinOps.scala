@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * user; q256 is a single map-side-combinable aggregation after a
   * broadcast of the 1-row max-day frame. No pair frames anywhere.
   */
-object EventJoinOps {
+object EventJoinOps extends graft.QueryPack {
 
   /** q252: nearest click for each purchase, per user. */
   def nearestEvent(s: SparkSession, d: String): DataFrame = {

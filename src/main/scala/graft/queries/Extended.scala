@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * frame-bounded moving aggregates, and an as-of join (composed from
   * built-ins per the preference order — no custom plan node needed).
   */
-object Extended {
+object Extended extends graft.QueryPack {
   import Num._
 
   /** Semi/anti joins (EXISTS / NOT EXISTS): per market segment, customers
@@ -133,8 +133,9 @@ object Extended {
       .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
     // NB: this fixture is deliberately UNskewed, so the salted plan
     // pays the dim-replication overhead with no straggler to win back —
-    // SkewBench (PLANS.md) shows where the trade flips (2× under a 90%
-    // hot key). 8 salts demonstrate the plan at half the replication.
+    // the skew bench recorded in PLANS.md shows where the trade flips
+    // (2× under a 90% hot key). 8 salts demonstrate the plan at half the
+    // replication.
     graft.operators.Skew.saltedJoin(fact, dim, "l_orderkey",
         saltFrom = col("l_linenumber"), salts = 8)
       .groupBy("o_orderstatus")
@@ -220,7 +221,7 @@ object Extended {
 
 /** Second extension pack: multidimensional subtotals, ordered string
   * aggregation, and exact percentiles. */
-object Extended2 {
+object Extended2 extends graft.QueryPack {
   import Num._
 
   /** CUBE: all subtotal combinations over (returnflag, linestatus). */
@@ -274,7 +275,7 @@ object Extended2 {
 }
 
 /** Third extension pack: pivot and the native grouped top-k aggregate. */
-object Extended3 {
+object Extended3 extends graft.QueryPack {
 
   /** Pivot (wide KPI tables): events per day × event_type. `coalesce`
     * because pivot yields null for absent cells where the oracle's
@@ -357,7 +358,7 @@ object Extended3 {
 
 /** Optimizer-evidence pack: correlated subqueries (Catalyst decorrelates
   * them into joins — SURVEY.md §4 "subquery decorrelation: free"). */
-object Extended4 {
+object Extended4 extends graft.QueryPack {
 
   /** Parts priced above their brand's average — a correlated scalar
     * subquery through the SQL API; Catalyst rewrites it to an aggregate
@@ -395,7 +396,7 @@ object Extended4 {
 }
 
 /** Null-semantics and fuzzy-matching pack. */
-object Extended5 {
+object Extended5 extends graft.QueryPack {
 
   /** Null handling: nullif-derived nullable column → null-counting
     * aggregates + a NULL-SAFE self-join (`<=>` ≡ IS NOT DISTINCT FROM)
@@ -468,7 +469,7 @@ object Extended5 {
   * reference never needed them, §2.6, but a user of a complete engine
   * expects them). Both plan as joins (left-semi-ish aggregation), not
   * row-at-a-time set containers. */
-object SetOps {
+object SetOps extends graft.QueryPack {
 
   /** Customers with BOTH fulfilled- and open-status orders. */
   def intersectCustomers(s: SparkSession, d: String): DataFrame = {
@@ -552,7 +553,7 @@ object SetOps {
   * lose nothing else. The oracle is rule-based (it knows which rows are
   * corrupt by construction), so the check pins Spark's actual parse
   * behavior, not a shared parser. */
-object Robustness {
+object Robustness extends graft.QueryPack {
 
   def deadLetter(s: SparkSession, d: String): DataFrame = {
     val k = col("o_orderkey")
@@ -585,7 +586,7 @@ object Robustness {
   * formula at the end — `corr()` builtins accumulate doubles cross-row
   * and disagree across engines in the last bits, so they cannot be
   * oracle-checked; this formulation is bit-stable at any parallelism. */
-object Profiling {
+object Profiling extends graft.QueryPack {
 
   /** Equi-width histogram of order totals: 10 buckets over [0, 500k). */
   def histogram(s: SparkSession, d: String): DataFrame = {
@@ -697,7 +698,7 @@ object Profiling {
 }
 
 /** Reshaping pack: unpivot (melt) — the inverse of q54's pivot. */
-object Extended6 {
+object Extended6 extends graft.QueryPack {
 
   /** Wide → long: each order row melts its numeric KPIs into
     * (metric, value) rows. */

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * fold/bucket domains (5 / 256) bound every later stage. The hash is
   * evaluated once per DISTINCT word in the oracle (the q29 rule).
   */
-object FeatureOps {
+object FeatureOps extends graft.QueryPack {
 
   private val Folds = 5L
   private val Buckets = 256L

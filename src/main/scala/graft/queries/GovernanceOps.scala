@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * union with the change predicate pushed to the scan — none of the
   * three shuffles more than a groupBy of bounded output.
   */
-object GovernanceOps {
+object GovernanceOps extends graft.QueryPack {
 
   private val K = 5L
 

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * (DwdTrafficUniqueVisitorDetail.java:60-109); clustering candidate
   * pairs is the batch generalization (same provenance as q57).
   */
-object GraphOps {
+object GraphOps extends graft.QueryPack {
 
   private val MaxRounds = 30
 

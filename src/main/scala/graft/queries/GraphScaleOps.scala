@@ -58,7 +58,7 @@ import org.apache.spark.sql.functions._
   * (gmall-realtime DwdTrafficUniqueVisitorDetail.java:60-109 keyed
   * dedup is the stream ancestor of the candidate-pair graph).
   */
-object GraphScaleOps {
+object GraphScaleOps extends graft.QueryPack {
 
   /** q357 core over an undirected, normalized (a<b, distinct) pair
     * list: per-node degree, triangle count via the degree-ordered

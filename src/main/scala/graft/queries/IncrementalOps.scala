@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * (DwdTrafficUniqueVisitorDetail.java:60-109); this is that decision
   * applied crawl-batch-at-a-time against a persistent index.
   */
-object IncrementalOps {
+object IncrementalOps extends graft.QueryPack {
 
   private val NewMod = 5 // doc_id % NewMod == NewMod-1 ⇒ incoming crawl
 

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * cost is one shuffle to the partition key plus a sort within each
   * bounded partition. Nothing is driver-side.
   */
-object IntervalOps {
+object IntervalOps extends graft.QueryPack {
 
   /** q241: per-day peak concurrent users via sweep line. */
   def maxConcurrency(s: SparkSession, d: String): DataFrame = {

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * static (DimApp) — so this is part of the ANN toolbox this engine
   * adds (SURVEY §LLM: IVF training).
   */
-object KmeansOps {
+object KmeansOps extends graft.QueryPack {
 
   private val K = 8
   private val Iters = 3

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * interleave is pure integer arithmetic, codegen'd) followed by a
   * 64-group aggregate — no shuffle beyond the final groupBy.
   */
-object LayoutOps {
+object LayoutOps extends graft.QueryPack {
 
   // ---- q160: snapshot diff ------------------------------------------
 

@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
   * side-output); a learned LM filter is the published scale-path
   * generalization a training-data pipeline runs in that slot.
   */
-object LmOps {
+object LmOps extends graft.QueryPack {
 
   private val TrainLang = "en"
   private val Fp = 1000000L // fixed-point probability scale (ppm)

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * to ~10¹² rows of 10⁸-unit values — past that, split the corpus or
   * widen to 2-limb sums (documented, the q134 rule).
   */
-object MomentsOps {
+object MomentsOps extends graft.QueryPack {
 
   private val D = "DECIMAL(38,0)"
 

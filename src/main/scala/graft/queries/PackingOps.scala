@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * All emitted measures are integer arithmetic (counts, token sums,
   * div/mod sequence indices) — engine-exact at any parallelism.
   */
-object PackingOps {
+object PackingOps extends graft.QueryPack {
 
   private val SeqCap = 512L // tokens per packed training sequence
   private val MixBudget = 600L // token budget per source (binds at sf0.001+)

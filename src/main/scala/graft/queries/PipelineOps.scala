@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * double-vs-double threshold, so the pass/fail booleans are
   * bit-exact in any engine at any parallelism.
   */
-object PipelineOps {
+object PipelineOps extends graft.QueryPack {
 
   private val N = 8 // n-gram width shared with RankingOps.dupNgramStats
 

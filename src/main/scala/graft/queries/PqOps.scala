@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * Phoenix point queries (DimUtil.java:26-60); PQ is how the same
   * lookup survives when the "table" is a billion embeddings.
   */
-object PqOps {
+object PqOps extends graft.QueryPack {
 
   private val M = 4      // subspaces
   private val Sub = 16   // dims per subspace

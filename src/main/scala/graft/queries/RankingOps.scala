@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * product with tf; a production user can swap in `log` at the cost of
   * oracle exactness), computed in one fixed operation order.
   */
-object RankingOps {
+object RankingOps extends graft.QueryPack {
 
   /** q112: per-document top-3 terms by TF·IDF (rational idf = N/df),
     * deterministic tiebreak on the term itself. Shape: one shuffle for

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * Scale (100 TB): one scan, three regexp counts per doc (codegen'd,
   * no UDF), one map-side-combinable aggregation to a bounded frame.
   */
-object ReadabilityOps {
+object ReadabilityOps extends graft.QueryPack {
 
   def readability(s: SparkSession, d: String): DataFrame = {
     val scored = Tables.documents(s, d)

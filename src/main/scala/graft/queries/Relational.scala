@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * tables are explicitly `broadcast(...)`, and big fact-fact joins shuffle
   * on their equi-keys — the exact plan shape we want on a real cluster.
   */
-object Relational {
+object Relational extends graft.QueryPack {
   import Num._
 
   /** A1/A9 analog (windowed sums reduced to grouped sums — ref

@@ -47,7 +47,7 @@ import graft.queries.Mat.StableOps
   * U1 tokenize family feeds it); ranked retrieval over those same
   * tokens is the published generalization of that endpoint.
   */
-object RetrievalOps {
+object RetrievalOps extends graft.QueryPack {
 
   /** Fixed query — terms present in the corpus vocabulary. */
   private val QueryTerms = Seq("spark", "join", "window")

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * are AQE-skew-splittable. q258's window partitions by region over
   * the bounded daily frame.
   */
-object RevenueOps {
+object RevenueOps extends graft.QueryPack {
 
   /** q257: yearly supplier-nation market share for PROMO parts → ASIA. */
   def marketShare(s: SparkSession, d: String): DataFrame = {

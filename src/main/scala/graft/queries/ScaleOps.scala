@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * key frame) and Catalyst's ReuseExchange rule deduplicates the
   * identical subplans physically: the executed q352 plan carries ONE
   * `Scan parquet` per audited (table, key) with the census and totals
-  * passes riding ReusedExchange nodes (verified via graft.Explain,
+  * passes riding ReusedExchange nodes (verified via graft.Inspect,
   * round 10 — this resolves the r9 doc conflict in favor of
   * COVERAGE.md's reading; zero extra fact scans, zero driver state).
   * q353 is one scan with a 3× Expand; q354 is one scan per dimension;
@@ -68,7 +68,7 @@ import org.apache.spark.sql.functions._
   * is the data-driven planning layer the builder prompt's 100 TB
   * mandate asks for.
   */
-object ScaleOps {
+object ScaleOps extends graft.QueryPack {
 
   private val BroadcastThreshold = 10L * 1024 * 1024
   private val SplitTarget = 32L // rows per task, test-corpus scale

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * TakeOrdered). q158 joins the token stream against a broadcast
   * K-row vocabulary.
   */
-object SegmentOps {
+object SegmentOps extends graft.QueryPack {
 
   private val SegLen = 12
   // packed (doc_id, seg) owner key: supports ≤2²⁰ segments per doc

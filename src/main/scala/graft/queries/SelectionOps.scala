@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   * quality scores (see gmall's dws quality tables); DSIR is the
   * published scale-path generalization.
   */
-object SelectionOps {
+object SelectionOps extends graft.QueryPack {
 
   private val B = 64 // hashed-feature buckets (DSIR uses 10⁴; 64 keeps
                      // every bucket populated at sf0.001)

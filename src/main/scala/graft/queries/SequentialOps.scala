@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Determinism: in-group order is (ts, event_id) — unique; both
   * engines fold the identical sequence.
   */
-object SequentialOps {
+object SequentialOps extends graft.QueryPack {
 
   private val ThrottleUs = 2L * 3600 * 1000000
 

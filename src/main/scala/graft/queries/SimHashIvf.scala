@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * `nprobe` cells trade recall for cost, and probing all K cells is
   * exactly brute force (property-tested in VectorOpsSpec).
   */
-object SimHashIvf {
+object SimHashIvf extends graft.QueryPack {
 
   private val Bits = 16
 
@@ -580,7 +580,7 @@ object SimHashIvf {
   * pairs weight the banded join by n₁·n₂. The class frame (an explode
   * + 16-aggregate + count) is materialized once via localCheckpoint so
   * the two join legs don't recompute it. */
-object SimHashPairs {
+object SimHashPairs extends graft.QueryPack {
 
   private val Bands = 4
   private val BandBits = 4

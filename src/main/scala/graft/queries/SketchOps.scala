@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * gram-hash modulus P (hashes are uniform in [0, P)); 63·P < 2⁶²
   * keeps the fixed-point estimate in BIGINT in both engines.
   */
-object SketchOps {
+object SketchOps extends graft.QueryPack {
 
   private val K = 64
   private val GramN = 4

@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * back); q218's lateral is nation-dim × ranked orders — Spark plans
   * it as a window-ranked join, never a per-row rescan.
   */
-object SqlSurface {
+object SqlSurface extends graft.QueryPack {
 
   private def tbl(d: String, t: String) = s"parquet.`$d/$t.parquet`"
 

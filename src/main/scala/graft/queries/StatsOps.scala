@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * per-segment value domain — customer-dim-scale at worst, the q199
   * precedent), never on the fact table.
   */
-object StatsOps {
+object StatsOps extends graft.QueryPack {
 
   private def dailyCents(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * q166's windows partition by user_id — per-user state only, the
   * scale-safe window class.
   */
-object StoreOps {
+object StoreOps extends graft.QueryPack {
 
   private val Shards = 64
 

@@ -50,7 +50,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * materialization, same posture as q31/q105's `doc_id < 100` — the
   * Spark side is capped identically so both engines see one corpus.
   */
-object SuffixOps {
+object SuffixOps extends graft.QueryPack {
 
   private val DocCap = 100
   private val RebuildCap = 250 // q145: the full-text rebuild runs wider

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * generation; the pairwise Jaccard verifier joins only on shared
   * shingles, never materializing the full cross product.
   */
-object TextOps {
+object TextOps extends graft.QueryPack {
 
   private[queries] def words(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -227,7 +227,7 @@ object TextOps {
     // core count before checkpointing: a localCheckpoint freezes the
     // current shuffle width into the RDD, and under the 4096-partition
     // production profile that schedules thousands of near-empty tasks
-    // per downstream stage (measured r10, ProfileBisect). Note the
+    // per downstream stage (measured r10, see PLANS.md). Note the
     // coalesce also narrows the PRODUCING stage (the distinct/df-filter
     // reduce runs at core-count width, not shuffle width) — acceptable
     // precisely because the frame is bounded; that precondition is

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * time arithmetic is integer microseconds (`unix_micros` /
   * `epoch_us`) so Spark and the oracle agree bit-for-bit.
   */
-object TimeAnalytics {
+object TimeAnalytics extends graft.QueryPack {
   import Num._
 
   /** A1/A3 analog (10 s tumbling event-time window — ref
@@ -378,7 +378,7 @@ object TimeAnalytics {
   * exposes all three). The session-window oracle reconstructs sessions
   * from first principles (lag + cumulative sum), proving Spark's native
   * `session_window` matches the manual state-machine semantics. */
-object WindowKinds {
+object WindowKinds extends graft.QueryPack {
   import graft.Num._
   import org.apache.spark.sql.expressions.{Window => W}
 

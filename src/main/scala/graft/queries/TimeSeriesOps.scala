@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * daily-count aggregate; every later frame is days- or types-sized.
   * Windows and folds only ever see the (bounded) day dimension.
   */
-object TimeSeriesOps {
+object TimeSeriesOps extends graft.QueryPack {
 
   private def dailyCounts(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * (public); the reference's trade-stats endpoints are the streaming
   * cousins of exactly these rollups.
   */
-object TpchClassics {
+object TpchClassics extends graft.QueryPack {
 
   private def revUnits: org.apache.spark.sql.Column =
     (expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100" +

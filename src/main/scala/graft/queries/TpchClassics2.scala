@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * per-part argmin after pre-aggregation). Ref: TPC-H spec (public);
   * the reference dashboard's trade stats are the streaming cousins.
   */
-object TpchClassics2 {
+object TpchClassics2 extends graft.QueryPack {
 
   private def cents(c: String): Column =
     expr(s"CAST(CAST($c AS DECIMAL(12,2)) * 100 AS BIGINT)")

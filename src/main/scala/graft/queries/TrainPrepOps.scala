@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * passes through map-side-combinable distincts and a gram-keyed
   * join — the q116 decontamination cost class.
   */
-object TrainPrepOps {
+object TrainPrepOps extends graft.QueryPack {
 
   private val SpanLen = 3
   private val StartMod = 97L

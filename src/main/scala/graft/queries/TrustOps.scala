@@ -62,7 +62,7 @@ import org.apache.spark.sql.functions._
   * only); this pack is the training-data-governance extension the
   * builder prompt mandates.
   */
-object TrustOps {
+object TrustOps extends graft.QueryPack {
 
   /** The q244 quasi-identifier projection: (nation, $1000 balance
     * bucket) as the QI, market segment as the sensitive attribute. */

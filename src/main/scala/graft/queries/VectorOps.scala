@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * LSH bucketing maps each vector to sign-bit buckets so candidate
   * search touches only same-bucket vectors (shuffle on bucket, not n²).
   */
-object VectorOps {
+object VectorOps extends graft.QueryPack {
 
   // Dot/norm/cosine are the native codegen'd expressions in
   // graft.functions.VecDot — bit-identical to the sequential

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * streaming twin is exactly Structured Streaming's session window
   * operator); q222 windows run on per-priority value histograms.
   */
-object WarehouseOps {
+object WarehouseOps extends graft.QueryPack {
 
   /** q219: (granularity, bucket) → exact revenue cents + order count. */
   def timeRollup(s: SparkSession, d: String): DataFrame = {

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * 1995–2001. One dense date per source keeps each endpoint's
   * single-`date` bind (DateUtil.java:7-12 semantics) meaningful.
   */
-object ServingPack {
+object ServingPack extends graft.QueryPack {
 
   private val EvDate = 20240115 // 317 events / 129 users at sf0.01
   private val OrdDate = 19950120 // populated at sf0.001/0.01/0.1 (2/10/80)

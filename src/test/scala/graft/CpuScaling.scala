@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * local[8] and local[32] in one JVM (fresh session per core count,
   * warm pass each so JIT tiering doesn't bias the second config).
   *
-  * Corpora are the ScaleLaw generators verbatim (deterministic md5 /
+  * Corpora come from the ScaleLaw generators (deterministic md5 /
   * format_string text, no RNG): `Customer#%09d` names at N=1M (10k
   * prefix-16 blocks × ~4950 pairs) and ~330-char docs at cap=20k.
   *
@@ -25,44 +25,6 @@ import org.apache.spark.sql.SparkSession
   * broken `SPARK_GRAFT_CPUS` plumbing.
   */
 object CpuScaling {
-
-  private def genCustomers(spark: SparkSession, n: Int): String = {
-    val dst = s"/tmp/cpuscale_cust_$n"
-    if (!new java.io.File(dst).exists()) {
-      spark.range(n).selectExpr(
-        "id + 1 AS c_custkey",
-        "format_string('Customer#%09d', id + 1) AS c_name",
-        "CAST(id % 25 AS INT) AS c_nationkey",
-        "element_at(array('BUILDING','AUTOMOBILE','MACHINERY'," +
-          "'HOUSEHOLD','FURNITURE'), CAST(id % 5 AS INT) + 1)" +
-          " AS c_mktsegment",
-        "CAST((id * 7919 % 999999) - 99999 AS DOUBLE) / 100 AS c_acctbal")
-        .write.mode("overwrite").parquet(s"$dst/customer.parquet")
-    }
-    dst
-  }
-
-  private def genDocs(spark: SparkSession, n: Int): String = {
-    val dst = s"/tmp/cpuscale_docs_$n"
-    if (!new java.io.File(dst).exists()) {
-      val block = (1 to 12)
-        .map(i => s"shared benchmark span token$i").mkString(" ")
-      spark.range(n).selectExpr(
-        "id AS doc_id",
-        s"""concat(CASE WHEN id % 10 <= 1 THEN
-           |   concat('$block', ' dec', CAST(id - id % 10 AS STRING), ' ')
-           | ELSE '' END,
-           | concat_ws(' ', transform(sequence(1, 36),
-           |   i -> substr(md5(concat(id, ':', i)), 1, 8)))) AS text"""
-          .stripMargin,
-        "'en' AS lang",
-        "concat('src', CAST(id % 4 AS STRING)) AS source")
-        .selectExpr("doc_id", "text", "lang", "source",
-          "CAST(length(text) AS LONG) AS n_chars")
-        .write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    }
-    dst
-  }
 
   final case class Stage(name: String, run: SparkSession => Long)
 
@@ -75,10 +37,10 @@ object CpuScaling {
     // generate corpora once (core count of the generating session is
     // irrelevant to the parquet bytes — everything is deterministic)
     var gen = session(32)
-    val erDir = genCustomers(gen, erN)
-    val erWarmDir = genCustomers(gen, erN / 10)
-    val docDir = genDocs(gen, docN)
-    val docWarmDir = genDocs(gen, docN / 10)
+    val erDir = ScaleLaw.genCustomers(gen, erN)
+    val erWarmDir = ScaleLaw.genCustomers(gen, erN / 10)
+    val docDir = ScaleLaw.genDocs(gen, docN)
+    val docWarmDir = ScaleLaw.genDocs(gen, docN / 10)
     gen.stop()
 
     val stages = Seq(
@@ -119,9 +81,6 @@ object CpuScaling {
 
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    GraftSession.start(GraftSession.cli(s"local[$cpus]", cpus))
   }
 }

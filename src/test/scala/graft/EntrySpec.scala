@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver's contract surface: entry() smoke (rows > 0 at sf0.001)
-  * and queries/oracleSql key alignment. */
+  * and queries/oracleSql key coverage in both directions. */
 class EntrySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -17,6 +17,24 @@ class EntrySpec extends AnyFunSuite {
     assert(os.subsetOf(qs), s"oracle-only keys: ${os.diff(qs)}")
     assert(qs.forall(_.matches("q\\d+_[a-z0-9_]+")))
     assert(qs.size >= 60)
+  }
+
+  test("every query without an oracle is rows-only by design") {
+    val noOracle = SparkEntry.queries.keySet.diff(SparkEntry.oracleSql.keySet)
+    assert(noOracle == Set(
+      "q121_approx_distinct", "q122_approx_quantiles", "q124_heavy_hitters",
+      "q130_grouped_heavy_hitters", "q132_cooccur_heavy_hitters",
+      "q138_bpe_encode", "q143_quality_classifier", "q144_curated_learned"))
+  }
+
+  test("no key appears in two packs; the registry holds all 363 queries") {
+    def dups(keys: Seq[String]): Set[String] =
+      keys.groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }.toSet
+    val queryKeys = SparkEntry.packs.flatMap(_.queries.keys)
+    assert(dups(queryKeys).isEmpty)
+    assert(dups(SparkEntry.packs.flatMap(_.oracle.keys)).isEmpty)
+    assert(SparkEntry.packs.distinct.size == SparkEntry.packs.size)
+    assert(queryKeys.size == 363 && SparkEntry.queries.size == 363)
   }
 
   test("driver-compat output contract: scalar-only, no wide decimals") {

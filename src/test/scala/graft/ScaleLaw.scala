@@ -48,7 +48,7 @@ object ScaleLaw {
 
   /** Suffix/span corpus: ~36 md5 tokens (~330 chars) per doc; decade
     * block planted on ids ≡ 0 and 1 (mod 10). */
-  private def genDocs(spark: SparkSession, n: Int): String = {
+  private[graft] def genDocs(spark: SparkSession, n: Int): String = {
     val dst = s"/tmp/scalelaw_docs_$n"
     if (!new java.io.File(dst).exists()) {
       val block = (1 to 12)
@@ -70,8 +70,9 @@ object ScaleLaw {
     dst
   }
 
-  /** ER corpus: the ScaleProbe `er` generator, verbatim semantics. */
-  private def genCustomers(spark: SparkSession, n: Int): String = {
+  /** ER corpus: TPC-H-shaped customers, shared with ScaleProbe `er` and
+    * CpuScaling. */
+  private[graft] def genCustomers(spark: SparkSession, n: Int): String = {
     val dst = s"/tmp/scalelaw_cust_$n"
     if (!new java.io.File(dst).exists()) {
       spark.range(n).selectExpr(
@@ -134,10 +135,7 @@ object ScaleLaw {
       "pass exactly three sizes or none")
     val out = sys.env.getOrElse("GRAFT_SCALELAW_OUT", "SCALELAW_r15.json")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.start(GraftSession.cli("local[32]", 32))
     spark.sparkContext.setLogLevel("ERROR")
 
     val plan = Seq(

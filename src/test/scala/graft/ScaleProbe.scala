@@ -136,19 +136,7 @@ object ScaleProbe {
     * block-size rule made measurable. */
   def erProbe(spark: SparkSession, ns: Seq[Int]): Unit = {
     ns.foreach { n =>
-      val dst = s"/tmp/scale_er_$n"
-      if (!new java.io.File(dst).exists()) {
-        spark.range(n).selectExpr(
-          "id + 1 AS c_custkey",
-          "format_string('Customer#%09d', id + 1) AS c_name",
-          "CAST(id % 25 AS INT) AS c_nationkey",
-          "element_at(array('BUILDING','AUTOMOBILE','MACHINERY'," +
-            "'HOUSEHOLD','FURNITURE'), CAST(id % 5 AS INT) + 1)" +
-            " AS c_mktsegment",
-          "CAST((id * 7919 % 999999) - 99999 AS DOUBLE) / 100" +
-            " AS c_acctbal")
-          .write.mode("overwrite").parquet(s"$dst/customer.parquet")
-      }
+      val dst = ScaleLaw.genCustomers(spark, n)
       var t0 = System.nanoTime()
       val ents = graft.queries.EntityResolutionOps
         .erPipeline(spark, dst).count()
@@ -375,131 +363,43 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("yield")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      yieldProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(5000, 15000, 45000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("lsheval")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      lshEvalProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(5000, 15000, 45000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("sssp")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      ssspProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(250000, 1000000, 4000000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("triangle")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      triangleProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(6000, 20000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("cumsum")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      cumsumProbe(spark, if (args.length > 1)
+    val spark = GraftSession.start(GraftSession.cli("local[32]", 32))
+    spark.sparkContext.setLogLevel("ERROR")
+    def ints(default: Seq[Int]): Seq[Int] =
+      if (args.length > 1) args.drop(1).toSeq.map(_.toInt) else default
+    args.headOption match {
+      case Some("yield") => yieldProbe(spark, ints(Seq(5000, 15000, 45000)))
+      case Some("lsheval") => lshEvalProbe(spark, ints(Seq(5000, 15000, 45000)))
+      case Some("sssp") => ssspProbe(spark, ints(Seq(250000, 1000000, 4000000)))
+      case Some("triangle") => triangleProbe(spark, ints(Seq(6000, 20000)))
+      case Some("cumsum") => cumsumProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toLong) else Seq(1500000L, 15000000L))
-      spark.stop(); return
+      case Some("er") => erProbe(spark, ints(Seq(15000, 150000)))
+      case Some("curve") => curveProbe(spark, Seq(1, 10), Seq(100, 300, 1000))
+      case Some("rebuild") => rebuildProbe(spark, ints(Seq(250, 1000, 5000)))
+      case Some("suffixsyn") => suffixSynProbe(spark, ints(Seq(5000, 20000)))
+      case Some("suffix") => suffixProbe(spark, ints(Seq(100, 300, 1000)))
+      case Some("skew") =>
+        args.drop(1).headOption.map(_.toInt).map(Seq(_))
+          .getOrElse(Seq(1000, 5000, 10000)).foreach(skewProbe(spark, _))
+      case _ => replicatedProbe(spark, args)
     }
-    if (args.headOption.contains("er")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      erProbe(spark, if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
-        else Seq(15000, 150000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("curve")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      curveProbe(spark, Seq(1, 10), Seq(100, 300, 1000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("rebuild")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      rebuildProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(250, 1000, 5000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("suffixsyn")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      suffixSynProbe(spark, if (args.length > 1)
-        args.drop(1).toSeq.map(_.toInt) else Seq(5000, 20000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("suffix")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      suffixProbe(spark, if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
-        else Seq(100, 300, 1000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("skew")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      args.drop(1).headOption.map(_.toInt).map(Seq(_))
-        .getOrElse(Seq(1000, 5000, 10000)).foreach(skewProbe(spark, _))
-      spark.stop(); return
-    }
+    spark.stop()
+  }
+
+  /** Default mode: `[mult] [query...]` against the sf0.1 tables
+    * replicated `mult` times. */
+  private def replicatedProbe(spark: SparkSession, args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val qs = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary", "q04_join_inner", "q13_window_tumble_10s",
         "q16_dedup_keep_first", "q23_word_count", "q29_minhash_signatures")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/scale_x$mult"
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     if (!new java.io.File(dst).exists()) {
       tables.foreach { t =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val df = spark.read.parquet(s"$src/$t.parquet")
         val big = if (Seq("lineitem", "events", "documents", "embeddings",
             "part").contains(t))
@@ -514,6 +414,5 @@ object ScaleProbe {
       val n = SparkEntry.queries(q)(spark, dst).count()
       println(f"${(System.nanoTime() - t0) / 1e9}%8.2f s  $q (rows=$n)")
     }
-    spark.stop()
   }
 }

@@ -121,37 +121,24 @@ class DimAppSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions makes vec_dot available session-wide (SQL string)") {
-    import org.apache.spark.sql.SparkSession
-    // getOrCreate reuses the shared test session (extensions apply only at
-    // session creation) — clear it so a NEW session builds on the same
-    // SparkContext with the extensions wired, then restore.
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = graft.GraftSession.local(2)
-      val r = s2.sql(
-        "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp").head()
-      assert(r.getDouble(0) == 11.0)
-      // the whole native-function surface rides the same extension
-      val g = s2.sql("SELECT gram_hashes('a b c', 2) AS h").head()
-      assert(g.getSeq[Long](0).length == 2)
-      val tk = s2.sql(
-        """SELECT topk_by(v, k, 2) AS top FROM
-          |  VALUES (1.0d, 'a'), (3.0d, 'b'), (2.0d, 'c') AS t(v, k)
-          |""".stripMargin).head()
-      assert(tk.getSeq[String](0) == Seq("b", "c"))
-      val hh = s2.sql(
-        """SELECT heavy_hitters(k, 4) AS hh FROM
-          |  VALUES ('x'), ('x'), ('y') AS t(k)""".stripMargin).head()
-      assert(hh.getSeq[org.apache.spark.sql.Row](0)
-        .map(e => e.getString(0) -> e.getLong(1)).toMap ==
-        Map("x" -> 2L, "y" -> 1L))
-    } finally {
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
-    }
+    // the shared test session is a GraftSession, so the extensions are
+    // wired at build time — no per-query registration
+    val r = spark.sql(
+      "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp").head()
+    assert(r.getDouble(0) == 11.0)
+    // the whole native-function surface rides the same extension
+    val g = spark.sql("SELECT gram_hashes('a b c', 2) AS h").head()
+    assert(g.getSeq[Long](0).length == 2)
+    val tk = spark.sql(
+      """SELECT topk_by(v, k, 2) AS top FROM
+        |  VALUES (1.0d, 'a'), (3.0d, 'b'), (2.0d, 'c') AS t(v, k)
+        |""".stripMargin).head()
+    assert(tk.getSeq[String](0) == Seq("b", "c"))
+    val hh = spark.sql(
+      """SELECT heavy_hitters(k, 4) AS hh FROM
+        |  VALUES ('x'), ('x'), ('y') AS t(k)""".stripMargin).head()
+    assert(hh.getSeq[org.apache.spark.sql.Row](0)
+      .map(e => e.getString(0) -> e.getLong(1)).toMap ==
+      Map("x" -> 2L, "y" -> 1L))
   }
 }
